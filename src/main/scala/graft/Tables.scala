@@ -1,16 +1,36 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (schemas verified in
   * FIXTURES.md; the reference snapshot is empty — /root/reference/README.md:1
   * — so the fixture schemas are the authoritative data model).
   *
   * All loaders return plain DataFrames so Catalyst keeps full pushdown /
-  * pruning freedom; at 100 TB these would be the same `spark.read.parquet`
-  * calls against a partitioned object-store layout, and every downstream
-  * operator is written to survive that (no collect, no driver loops).
+  * pruning freedom, and every downstream operator is written to survive
+  * a partitioned object-store layout at 100 TB (no collect, no driver
+  * loops).
+  *
+  * Schema memo: a bare `spark.read.parquet` launches a schema-inference
+  * job on every open, and a session builds many queries over the same
+  * few tables. `table` therefore infers each table's schema once and
+  * opens it with `spark.read.schema(memoized).parquet(path)`, which plans
+  * the same relation and launches no job. The memo is keyed by the
+  * qualified path and stamped with every data file's length and
+  * modification time (through the Hadoop FileSystem, so object-store
+  * paths work) plus the session's set conf entries containing
+  * `.parquet.` (nanosAsLong, binaryAsString, int96AsTimestamp,
+  * inferTimestampNTZ, ...), which change what inference returns. It
+  * holds one entry per path, replaced when the stamp changes. Only the
+  * schema is memoized, never the DataFrame or relation: each open gets
+  * fresh expression IDs, so two opens of one table stay independent
+  * plans (a self-join of two loader calls resolves) and see the files
+  * as they are at open time.
   */
 object Tables {
   /** Exactness contract, enforced in code (round-18 ADVICE item 3): the
@@ -34,7 +54,37 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     requireAnsi(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Qualified path → (stamp, inferred schema); see the header. */
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+  private final case class Stamp(files: Seq[(String, Long, Long)], conf: Map[String, String])
+
+  /** The memoized schema of `path`. Inference runs outside any map lock
+    * (it is a Spark job); two racing first opens may both infer, and the
+    * later put wins with an equal value. A path with no status (missing,
+    * or a glob) has nothing to stamp, so it is inferred unmemoized and
+    * Spark raises its own PATH_NOT_FOUND for a missing one. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = fs.makeQualified(p).toString
+    val stamp = try {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(Stamp(files.result(), spark.conf.getAll.filter(_._1.contains(".parquet."))))
+    } catch { case _: FileNotFoundException => None }
+    Option(schemas.get(key)).filter(e => stamp.contains(e._1)).map(_._2).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      stamp.foreach(s => schemas.put(key, (s, inferred)))
+      inferred
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -1,7 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Both events-loader physical-type branches, exercised against tiny
   * in-test parquet files (round-9 verdict item 3: the TIMESTAMP(NANOS)
@@ -170,5 +174,104 @@ class LoaderSpec extends AnyFunSuite {
       "the guard must not flip the consumer's conf")
     consumer.conf.set("spark.sql.ansi.enabled", "true")
     assert(Tables.lineitem(consumer, TestSpark.sf).columns.nonEmpty)
+  }
+
+  /** Spark jobs started while `body` runs. Listener events are delivered
+    * in order, so the jobs between a leading and a trailing marker job
+    * are exactly the ones `body` started, whatever was still queued when
+    * the listener was added. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(m: String): Unit = {
+      sc.setJobDescription(m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("loader-spec-start")
+      val out = body
+      marker("loader-spec-end")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("loader-spec-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val jobs = seen.asScala.toSeq
+      assert(jobs.contains("loader-spec-end"), "marker job never reached the listener")
+      (out, jobs.dropWhile(_ != "loader-spec-start").indexOf("loader-spec-end") - 1)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A single-file parquet table with int64 columns c0..c(n-1), written in
+    * place over any previous version (the fixture layout). */
+  private def writeWide(file: String, n: Int): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{Types, PrimitiveType}
+    val b = Types.buildMessage()
+    (0 until n).foreach(i =>
+      b.addField(Types.required(PrimitiveType.PrimitiveTypeName.INT64).named(s"c$i")))
+    val schema = b.named("t")
+    new java.io.File(file).getParentFile.mkdirs()
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withType(schema).build()
+    try {
+      val g = new SimpleGroupFactory(schema).newGroup()
+      (0 until n).foreach(i => g.add(s"c$i", i.toLong))
+      writer.write(g)
+    } finally writer.close()
+  }
+
+  test("schema memo: a second open runs no job, and two opens still self-join") {
+    val first = Tables.nation(spark, TestSpark.sf)
+    val (second, jobs) = jobsDuring(Tables.nation(spark, TestSpark.sf))
+    assert(jobs == 0, "a second open of an unchanged table must not infer again")
+    assert(second.schema == first.schema)
+    // the memo holds the schema, never the DataFrame: two opens are
+    // independent plans, so a self-join resolves exactly as two plain reads
+    val a = Tables.nation(spark, TestSpark.sf)
+    val b = Tables.nation(spark, TestSpark.sf)
+    val got = a.join(b, a("n_regionkey") === b("n_nationkey")).count()
+    val pa = spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+    val pb = spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+    assert(got == pa.join(pb, pa("n_regionkey") === pb("n_nationkey")).count())
+    assert(got == a.count(), "every region key is a nation key")
+  }
+
+  test("schema memo: a table rewritten in place is never served a stale schema") {
+    val dir = s"${Tables.scratchDir}/loader_spec/stale"
+    writeWide(s"$dir/t.parquet", 2)
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("c0", "c1"))
+    writeWide(s"$dir/t.parquet", 3)
+    val df = Tables.table(spark, dir, "t")
+    assert(df.columns.toSeq == Seq("c0", "c1", "c2"))
+    assert(df.collect().map(_.toSeq).toSeq == Seq(Seq(0L, 1L, 2L)))
+  }
+
+  test("schema memo: keyed by parquet conf, so the nanos fail-fast survives a warm memo") {
+    // the SAME nanos path, first read by the flagged session: a memo keyed
+    // by path and file stamp alone would then serve ts:bigint to a session
+    // that must refuse the file
+    val base = s"${Tables.scratchDir}/loader_spec/nanos_shared"
+    writeNanos(base)
+    assert(Tables.table(spark, base, "events").schema("ts").dataType == LongType)
+    val consumer = spark.newSession()
+    consumer.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val e = intercept[IllegalArgumentException](Tables.events(consumer, base))
+    assert(e.getMessage.contains("BUILDING"), e.getMessage)
+  }
+
+  test("a missing table still raises Spark's PATH_NOT_FOUND") {
+    val e = intercept[AnalysisException] {
+      Tables.table(spark, TestSpark.sf, "no_such_table")
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 }
